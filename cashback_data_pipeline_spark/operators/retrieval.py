@@ -227,6 +227,9 @@ def _bucket_ids(spark, qterms: list[str], n_buckets: int) -> set[int]:
     parallelized a default-parallelism pickled RDD, a 32-task +
     32-Python-worker job per search just to hash ≤ 17 strings)."""
 
+    if not qterms:
+        return set()  # "SELECT " with no projections would not parse
+
     def q(t: str) -> str:
         return "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
 

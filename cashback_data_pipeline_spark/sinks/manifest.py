@@ -3684,19 +3684,25 @@ def _merge_candidate_split(
         # no stat source COVERS the merge key: skip the agg + key collect
         # outright — everything would be a candidate anyway
         return files, [], stats
-    agg = incoming_unique.agg(
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count_distinct(key).alias("nd"),
-        F.sum(F.col(key).isNull().cast("long")).alias("nulls"),
-    ).first()
-    if agg["nd"] == 0 or (agg["nulls"] or 0) > 0:
-        # empty or null-keyed incoming: range/in pruning is not sound
-        return files, [], stats
-    if agg["nd"] <= _MERGE_IN_LIST_MAX:
-        keys = [r[0] for r in incoming_unique.select(key).distinct().collect()]
+    # one bounded collect decides both the size class and, for small
+    # sets, the exact IN list; only a larger set pays the range agg
+    keys = [
+        r[0]
+        for r in incoming_unique.select(key).distinct().limit(_MERGE_IN_LIST_MAX + 1).collect()
+    ]
+    if len(keys) <= _MERGE_IN_LIST_MAX:
+        if not keys or any(k is None for k in keys):
+            # empty or null-keyed incoming: range/in pruning is not sound
+            return files, [], stats
         preds = [(phys_key, "in", keys)]
     else:
+        agg = incoming_unique.agg(
+            F.min(key).alias("lo"),
+            F.max(key).alias("hi"),
+            F.sum(F.col(key).isNull().cast("long")).alias("nulls"),
+        ).first()
+        if agg["nulls"]:
+            return files, [], stats
         preds = [(phys_key, ">=", agg["lo"]), (phys_key, "<=", agg["hi"])]
     cand, _ = filestats.prune_files(files, stats, preds)
     # bloom refinement (round 8): on a hash-distributed key layout every

@@ -656,6 +656,214 @@ def test_bloom_prunes_merge_candidates_on_hash_layout(spark, mk_table):
     assert snap[123] == "updated" and len(snap) == 4000
 
 
+def _decoded(blooms):
+    import base64
+
+    return {
+        rel: {c: (base64.b64decode(b["b"]), b["m"], b["d"]) for c, b in cols.items()}
+        for rel, cols in blooms.items()
+    }
+
+
+@pytest.mark.parametrize("m_bits", [1 << 15, 40000])
+def test_bloom_venues_build_identical_filters(spark, tmp_path, monkeypatch, m_bits):
+    """The driver venue (pyarrow + numpy) and the distributed mapInArrow
+    venue build byte-identical filters, and both equal the scalar
+    reference bloom_bytes_from_values over each file's values — int,
+    negative, short, nullable 60-bit int and nullable string columns, an
+    empty file, a partitioned layout whose basenames repeat and whose
+    partition value needs escaping."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    table = str(tmp_path / "t")
+    schema = "id long, neg long, sh short, big long, s string, dt string"
+    rows = [
+        (
+            i * 7919,
+            -i * 31,
+            i % 300 - 150,
+            None if i % 3 == 0 else 2**60 + i,  # nullable, beyond float precision
+            None if i % 5 == 0 else f"s{i % 97}",
+            ["2024-01-01", "a b:c"][i % 2],
+        )
+        for i in range(600)
+    ]
+    df = spark.createDataFrame(rows, schema)
+    df.coalesce(1).write.partitionBy("dt").parquet(os.path.join(table, "data", "c1"))
+    spark.createDataFrame([], schema).drop("dt").coalesce(1).write.parquet(
+        os.path.join(table, "data", "c2")
+    )
+    rel_files = sorted(
+        os.path.relpath(os.path.join(d, f), table)
+        for d, _, fs in os.walk(os.path.join(table, "data"))
+        for f in fs
+        if f.endswith(".parquet")
+    )
+    bases = [os.path.basename(r) for r in rel_files]
+    assert len(set(bases)) < len(bases)  # the one-task write repeats basenames
+    assert any(r.startswith(os.path.join("data", "c2")) for r in rel_files)  # the empty file
+    cols = ["id", "neg", "sh", "big", "s"]
+    fschema = df.drop("dt").schema
+    driver = filestats.collect_bloom_filters(spark, table, rel_files, cols, fschema, m_bits)
+    monkeypatch.setattr(filestats, "DRIVER_BLOOM_MAX_BYTES", -1)
+    dist = filestats.collect_bloom_filters(spark, table, rel_files, cols, fschema, m_bits)
+    assert _decoded(driver) == _decoded(dist)
+    assert set(driver) == set(rel_files)
+    for rel in rel_files:
+        tbl = pq.ParquetFile(os.path.join(table, rel)).read(columns=cols)
+        for c in cols:
+            vals = [v for v in tbl.column(c).to_pylist() if v is not None]
+            dom = "str" if c == "s" else "int"
+            assert _decoded(driver)[rel][c] == (
+                filestats.bloom_bytes_from_values(vals, dom, m_bits), m_bits, dom
+            )
+
+
+def test_commit_sized_bloom_writes_run_no_python_scan(spark, mk_table, monkeypatch):
+    """A commit-sized write_table(bloom_cols=) and upsert_table build
+    their filters on the driver: with the Python-worker scan entry
+    points disabled both still commit, and the point lookup still
+    prunes and reads exactly."""
+    from pyspark.sql import DataFrame
+
+    def _refuse(*_a, **_k):
+        raise AssertionError("commit-sized bloom build launched a Python scan")
+
+    monkeypatch.setattr(DataFrame, "mapInPandas", _refuse)
+    monkeypatch.setattr(DataFrame, "mapInArrow", _refuse)
+    t = mk_table()
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(2000)], "id long, s string")
+    M.write_table(df.repartition(4, "id"), t, stats_cols=["id"], bloom_cols=["id", "s"])
+    upd = spark.createDataFrame([(7, "updated"), (5000, "new")], "id long, s string")
+    M.upsert_table(spark, upd, t, key="id")
+    m = M.read_manifest(t, M.current_version(t))
+    assert all((m["stats"].get(f) or {}).get("bloom") for f in m["files"])
+    _, skipped = filestats.prune_files_bloom(
+        M.get_log_store(t), t, m["files"], m["stats"], ("id", "==", 7)
+    )
+    assert skipped >= 1
+    assert [(r.id, r.s) for r in M.read_table(spark, t, skip=("id", "==", 7)).collect()] == [
+        (7, "updated")
+    ]
+    assert M.read_table(spark, t).count() == 2001
+
+
+@pytest.mark.parametrize("venue", ["driver", "distributed"])
+def test_partitioned_bloom_write_prunes_exactly(spark, mk_table, monkeypatch, venue):
+    """A one-task partitioned write repeats the part-file basename in
+    every dt= dir; its filters are keyed by table-relative path, so the
+    commit succeeds and a bloom-pruned point lookup matches the model."""
+    if venue == "distributed":
+        monkeypatch.setattr(filestats, "DRIVER_BLOOM_MAX_BYTES", -1)
+    t = mk_table()
+    model = [(i, f"c{i % 37}", ["2024-01-01", "2024-01-02", "2024-01-03"][i % 3]) for i in range(300)]
+    df = spark.createDataFrame(model, "id long, cust string, dt string").coalesce(1)
+    M.write_table(df, t, partition_by=["dt"], bloom_cols=["cust"])
+    m = M.read_manifest(t, M.current_version(t))
+    assert len(m["files"]) == 3
+    skip = [("cust", "==", "c5")]
+    _, skipped = filestats.prune_files_bloom(M.get_log_store(t), t, m["files"], m["stats"], skip)
+    want = sorted((i, c, d) for i, c, d in model if c == "c5")
+    assert skipped == 3 - len({d for _, _, d in want})
+    got = M.read_table(spark, t, skip=skip).collect()
+    assert sorted((r.id, r.cust, r.dt) for r in got) == want
+
+
+@pytest.mark.parametrize("venue", ["driver", "distributed"])
+def test_bloom_lookup_of_nullable_bigint_is_exact(spark, tmp_path, monkeypatch, venue):
+    """A nullable BIGINT beyond float precision hashes as itself on both
+    venues (a pandas batch would widen it to float64 and the filter
+    would prove the key absent)."""
+    if venue == "distributed":
+        monkeypatch.setattr(filestats, "DRIVER_BLOOM_MAX_BYTES", -1)
+    t = str(tmp_path / "t")
+    big = 2**60 + 1
+    df = spark.createDataFrame([(big, "a"), (None, "b"), (5, "c")], "id long, s string")
+    M.write_table(df.coalesce(1), t, bloom_cols=["id"])
+    assert [r.s for r in M.read_table(spark, t, skip=("id", "==", big)).collect()] == ["a"]
+
+
+def test_corrupt_bloom_sidecar_warns_and_keeps_files(spark, mk_table):
+    t = mk_table()
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(400)], "id long, s string")
+    M.write_table(df.repartition(4, "id"), t, bloom_cols=["id"])
+    m = M.read_manifest(t, M.current_version(t))
+    store = M.get_log_store(t)
+    ref = next(iter({m["stats"][f]["bloom"] for f in m["files"]}))
+    with open(store.join(t, ref).removeprefix("file://"), "w") as fh:
+        fh.write("{not json")
+    with pytest.warns(UserWarning, match="unreadable bloom sidecar.*" + ref):
+        kept, skipped = filestats.prune_files_bloom(
+            store, t, m["files"], m["stats"], ("id", "==", 150)
+        )
+    assert skipped == 0 and kept == m["files"]
+    assert [r.s for r in M.read_table(spark, t, skip=("id", "==", 150)).collect()] == ["v150"]
+
+
+def test_hadoop_footer_failure_warns_and_falls_back_to_scan(spark, tmp_path, monkeypatch):
+    """A remote store whose Hadoop footer read fails says so, and the
+    fallback Spark scan still resolves every file — basenames repeat
+    across the partition dirs."""
+    t = str(tmp_path / "t")
+    df = spark.createDataFrame(
+        [(i, ["x", "a b"][i % 2]) for i in range(100)], "id long, dt string"
+    ).coalesce(1)
+    M.write_table(df, t, partition_by=["dt"])
+    files = M.read_manifest(t, M.current_version(t))["files"]
+
+    def _fail(*_a, **_k):
+        raise OSError("footer read refused")
+
+    monkeypatch.setattr(filestats, "_local_path", lambda p: None)
+    monkeypatch.setattr(filestats, "_hadoop_footer_stats", _fail)
+    with pytest.warns(UserWarning, match="Hadoop FileSystem API"):
+        stats = filestats.collect_file_stats(spark, t, files, ["id"])
+    assert set(stats) == set(files)
+    assert sum(s["rows"] for s in stats.values()) == 100
+    assert {(s["cols"]["id"]["min"], s["cols"]["id"]["max"]) for s in stats.values()} == {
+        (0, 98), (1, 99)
+    }
+
+
+def _split(spark, t, key, incoming):
+    return M._merge_candidate_split(spark, t, M.read_manifest(t, M.current_version(t)), key, incoming)
+
+
+def test_merge_split_null_or_empty_incoming_keeps_every_file(spark, mk_table):
+    t = mk_table()
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(4000)], "id long, s string")
+    M.write_table(df.repartition(8, "id"), t, stats_cols=["id"], bloom_cols=["id"])
+    files = M.read_manifest(t, M.current_version(t))["files"]
+    one = spark.createDataFrame([(123, "x")], "id long, s string")
+    cand, carried, _ = _split(spark, t, "id", one)
+    assert len(cand) < len(files) and len(cand) + len(carried) == len(files)
+    nullk = spark.createDataFrame([(123, "x"), (None, "n")], "id long, s string")
+    assert _split(spark, t, "id", nullk)[:2] == (files, [])
+    assert _split(spark, t, "id", one.limit(0))[:2] == (files, [])
+
+
+def test_merge_split_above_in_list_cap_prunes_by_range(spark, mk_table):
+    """More than 1,024 distinct incoming keys prune on the [min, max]
+    range; a NULL key anywhere in the set still makes every file a
+    candidate, and the upsert stays exact."""
+    t = mk_table()
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(8000)], "id long, s string")
+    M.write_table(df, t, stats_cols=["id"], cluster_by=["id"], cluster_files=8)
+    files = M.read_manifest(t, M.current_version(t))["files"]
+    many = spark.createDataFrame(
+        [(i, "u") for i in range(2000, 2000 + M._MERGE_IN_LIST_MAX + 100)], "id long, s string"
+    )
+    cand, carried, _ = _split(spark, t, "id", many)
+    assert carried and len(cand) + len(carried) == len(files)
+    with_null = many.unionByName(spark.createDataFrame([(None, "n")], "id long, s string"))
+    assert _split(spark, t, "id", with_null)[:2] == (files, [])
+    M.upsert_table(spark, many, t, key="id")
+    snap = {r.id: r.s for r in M.read_table(spark, t).collect()}
+    assert len(snap) == 8000 and snap[2500] == "u" and snap[10] == "v10"
+
+
 def test_zorder_layout_prunes_every_dimension(spark, mk_table):
     """write_table(zorder_by=[a, b]): a skip on EITHER column must prune
     files — the property a lexicographic cluster_by only gives its

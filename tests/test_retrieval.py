@@ -344,3 +344,8 @@ def test_bm25_script_mode_retrieves_cjk(spark):
     assert retrieval.bm25_topk(docs, ["数"], k=3).count() == 0
     kw = retrieval.tfidf_keywords(docs.filter("doc_id = 0"), k=3, mode="script")
     assert all(len(r["term"]) == 1 for r in kw.collect())
+
+
+def test_bucket_ids_of_no_terms_is_empty(spark):
+    assert retrieval._bucket_ids(spark, [], 8) == set()
+    assert len(retrieval._bucket_ids(spark, ["a", "it's"], 8)) in (1, 2)
